@@ -16,23 +16,23 @@ def test_queries_have_oracles():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     assert len(qs) >= 30
-    missing = set(oracles) - set(qs)
-    assert not missing, f"oracle without query: {missing}"
-    # every query except explicitly non-SQL-expressible ones has an oracle
-    # (winnow_rolling_pairs: the fingerprint hash is a numpy matmul in
-    # a mapInPandas stage — DuckDB cannot replicate it; the md5 twin
-    # winnow_overlap_pairs carries the value-exact oracle)
-    no_oracle = set(qs) - set(oracles)
-    assert no_oracle <= {"lsh_ann_pairs", "approx_distinct_parts", "winnow_rolling_pairs"}
+    assert set(oracles) == set(qs)
+    for name, sql in oracles.items():
+        assert isinstance(sql, str) and sql.strip(), f"{name}: empty oracle"
+
+
+def test_query_table_is_well_formed():
+    """Each query is declared once in _QUERIES; a duplicated name would
+    otherwise collapse silently in the derived dicts."""
+    assert len(entrymod._QUERIES) == len(entrymod.queries()) == len(entrymod.oracle_sql())
 
 
 def test_window_covers_stalest_queries():
     """The driver grades the first 50 entries of queries() each round.
-    _rotate_stalest_first must put the least-recently-verified queries
-    (and any _VERIFY_NEXT implementation-changed ones) inside that
-    window, computed from the committed CORRECTNESS_r*.json artifacts —
-    so 'continuously green' is a structural property, not a per-round
-    manual edit."""
+    The stalest-first rotation must put the least-recently-verified
+    queries inside that window, computed from the committed
+    CORRECTNESS_r*.json artifacts — so 'continuously green' is a
+    structural property, not a per-round manual edit."""
     import glob
     import json
     import re
@@ -52,66 +52,61 @@ def test_window_covers_stalest_queries():
                 last[name] = max(last.get(name, 0), rnd)
     names = list(entrymod.queries())
     window, behind = set(names[:50]), names[50:]
-    for forced in entrymod._active_verify_next():
-        assert forced in window, f"forced verify entry {forced} outside window"
-    # deferral/forcing table hygiene: every entry names a real query
-    # and a concrete round (a typo'd name would silently do nothing)
-    for dname, drnd in entrymod._DEFER_ONCE.items():
-        assert dname in names, f"_DEFER_ONCE names unknown query {dname}"
-        assert isinstance(drnd, int) and drnd > 0, f"_DEFER_ONCE[{dname}] not a round"
-    for vname, vrnd in entrymod._VERIFY_AT.items():
-        assert vname in names, f"_VERIFY_AT names unknown query {vname}"
-        assert isinstance(vrnd, int) and vrnd > 0, f"_VERIFY_AT[{vname}] not a round"
-    for vname, vrnd in entrymod._VERIFY_NEXT.items():
-        assert vname in names, f"_VERIFY_NEXT names unknown query {vname}"
-        assert isinstance(vrnd, int) and vrnd > 0, f"_VERIFY_NEXT[{vname}] not a round"
-    # no query behind the window may be staler than any window entry —
-    # except a _DEFER_ONCE entry whose round key names the UPCOMING
-    # round and which has no verdict: the rotation deliberately holds
-    # it back for exactly that round when the window must first fit a
-    # full stalest cohort. The round key makes the exemption expire by
-    # itself — an expired entry (or one WITH a verdict) is NOT exempt,
-    # so a deferral can never silently outlive its one round.
-    staleness = lambda n: -1 if n in entrymod._active_verify_next() else last.get(n, -1)
+    # no query behind the window may be staler than any window entry
+    staleness = lambda n: last.get(n, -1)
     worst_in_window = max(staleness(n) for n in window)
-    active_defer = entrymod._active_deferrals()
     for n in behind:
-        if n in active_defer and n not in last:
-            continue
         assert staleness(n) >= worst_in_window, (
             f"{n} (last pass r{last.get(n)}) is staler than a window entry"
         )
 
 
-def test_verify_at_is_round_keyed(monkeypatch):
-    """A _VERIFY_AT entry forces its query only when the upcoming round
-    matches its key — inert in every other round, so it can never
-    displace a stale-cohort member from the wrong round's window."""
-    last = entrymod._last_pass_rounds()
-    for probe in (9, 10, 11):
-        monkeypatch.setattr(entrymod, "_next_round", lambda r=probe: r)
-        active = entrymod._active_verify_next()
-        for name, rnd in entrymod._VERIFY_NEXT.items():
-            assert (name in active) == (last.get(name, -1) < rnd), (name, rnd)
-        for name, rnd in entrymod._VERIFY_AT.items():
-            assert (name in active) == (rnd == probe), (probe, name, rnd)
+def test_rotation_holds_age_bound(monkeypatch):
+    """Simulate the rotation over a saturated 50/50/50 corpus: each
+    round grades the first 50 queries, every query is graded at least
+    once in any 3 consecutive rounds, and no verdict ages past 3 rounds.
+    The corpus may not outgrow 3 windows, or the bound cannot hold."""
+    window = 50
+    names = [name for name, _, _ in entrymod._QUERIES]
+    assert len(entrymod.queries()) <= 3 * window
+    last = {n: 10 + i % 3 for i, n in enumerate(names)}
+    monkeypatch.setattr(entrymod, "_last_pass_rounds", lambda: dict(last))
+    graded = []
+    for rnd in range(13, 22):
+        assert max(rnd - r for r in last.values()) <= 3, rnd
+        win = list(entrymod.queries())[:window]
+        for n in win:
+            last[n] = rnd
+        graded.append(set(win))
+    for i in range(len(graded) - 2):
+        assert set(names) == graded[i] | graded[i + 1] | graded[i + 2], i
 
 
-def test_verify_next_self_expires(monkeypatch):
-    """A _VERIFY_NEXT entry deactivates the moment a PASSING verdict
-    from (or after) its change-round exists, and keeps forcing while
-    the latest verdict predates it — no manual clearing step."""
-    monkeypatch.setattr(entrymod, "_VERIFY_NEXT", {"latest_events": 9})
-    monkeypatch.setattr(entrymod, "_VERIFY_AT", {})
-    monkeypatch.setattr(entrymod, "_last_pass_rounds", lambda: {"latest_events": 8})
-    assert "latest_events" in entrymod._active_verify_next()
-    monkeypatch.setattr(entrymod, "_last_pass_rounds", lambda: {"latest_events": 9})
-    assert "latest_events" not in entrymod._active_verify_next()
+def test_manifest_window_matches_queries():
+    """tools/window_manifest.py records the same window queries() serves."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "window_manifest", "/root/repo/tools/window_manifest.py"
+    )
+    wm = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(wm)
+    m = wm.build_manifest()
+    in_window = [r["name"] for r in m["queries"] if r["in_window"]]
+    assert in_window == list(entrymod.queries())[: m["window_size"]]
 
 
-def test_each_query_runs(spark, sf_dir):
-    for name, fn in entrymod.queries().items():
-        df = fn(spark, sf_dir)
+def _built(corpus):
+    """(name, DataFrame, formatted plan) per corpus query from the
+    shared ``corpus`` fixture; a query whose build failed fails here."""
+    for name, built in corpus.items():
+        if isinstance(built, Exception):
+            raise AssertionError(f"{name}: plan build failed") from built
+        yield name, *built
+
+
+def test_each_query_runs(corpus):
+    for name, df, _ in _built(corpus):
         assert df.columns, name
 
 
@@ -162,11 +157,10 @@ def test_contamination_broadcasts_eval_side(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_no_nested_loop_joins_anywhere(spark):
+def test_no_nested_loop_joins_anywhere(corpus):
     """No corpus query may fall back to a cartesian/nested-loop join —
     at 100 TB that's a non-starter. (Broadcasts of single-row
     aggregate frames are the sanctioned exceptions.)"""
-    qs = entrymod.queries()
     single_row_broadcasts = {
         "idle_rich_customers",
         "semi_anti_counts",
@@ -175,10 +169,9 @@ def test_no_nested_loop_joins_anywhere(spark):
         "hll_distinct_contract",  # crossJoin of two 1-row aggs (exact x est)
         "dsir_scores",  # smoothing totals: 1-row agg crossJoined onto bucket weights
     }
-    for name, fn in qs.items():
+    for name, _, plan in _built(corpus):
         if name in single_row_broadcasts:
             continue  # 1-row aggregate broadcast, intentional
-        plan = _plan_of(fn(spark, "/root/testdata/sf0.001"))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
         # row-at-a-time Python in a plan means a 10-100x slower hot path
@@ -187,7 +180,7 @@ def test_no_nested_loop_joins_anywhere(spark):
         assert "BatchEvalPython" not in plan, name
 
 
-def test_no_global_windows_anywhere(spark):
+def test_no_global_windows_anywhere(corpus):
     """No corpus query may plan a window over an empty partitionSpec —
     that funnels the whole input through ONE partition. In a formatted
     plan a global window's Arguments line has only [functions], [order]
@@ -196,11 +189,9 @@ def test_no_global_windows_anywhere(spark):
     bounded vocabulary (documented in operators/curation.py)."""
     import re
 
-    qs = entrymod.queries()
-    for name, fn in qs.items():
+    for name, _, plan in _built(corpus):
         if name == "vocab_coverage":
             continue
-        plan = _plan_of(fn(spark, "/root/testdata/sf0.001"))
         for line in plan.splitlines():
             if "windowspecdefinition" in line and "Arguments:" in line:
                 groups = re.split(r"\], \[", line)
@@ -247,153 +238,3 @@ def test_scale_audit_subset_runs(spark):
     assert set(res) == {"filter_project", "text_stats"}
     for r in res.values():
         assert r["err"] is None and r["rows"] > 0 and r["sec"] >= 0
-
-
-def test_window_capacity_check():
-    """tools/window_manifest.check_capacity catches an over-committed
-    round when the pin is WRITTEN (VERDICT r9 item 6): the real tree
-    passes, a synthetic overflow raises."""
-    import importlib.util
-
-    import pytest
-
-    spec = importlib.util.spec_from_file_location(
-        "window_manifest", "/root/repo/tools/window_manifest.py"
-    )
-    wm = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(wm)
-
-    class FakeEntry:
-        _VERIFY_AT = {}
-        _VERIFY_NEXT = {}
-
-    def mkrows(n_window_ok, n_outside_due):
-        rows = []
-        for i in range(n_window_ok):
-            rows.append(
-                {"name": f"w{i}", "in_window": True, "last_pass_round": 7,
-                 "verdict_age_rounds": 3, "deferred_once": False}
-            )
-        for i in range(n_outside_due):
-            rows.append(
-                {"name": f"o{i}", "in_window": False, "last_pass_round": 8,
-                 "verdict_age_rounds": 2, "deferred_once": False}
-            )
-        return rows
-
-    # healthy: 50 in-window at age 3, 48 outside aging to 3 next round
-    cap = wm.check_capacity(mkrows(50, 48), set(), FakeEntry, 10)
-    assert cap["next_round_demand"] == 48
-
-    # a must-grade query outside the window raises at build time
-    rows = mkrows(50, 1)
-    rows[-1]["verdict_age_rounds"] = 3
-    rows[-1]["last_pass_round"] = 7
-    with pytest.raises(ValueError, match="must be graded this round"):
-        wm.check_capacity(rows, set(), FakeEntry, 10)
-
-    # pins pushing next round past 50 raise when the pin is written
-    class PinnedEntry:
-        _VERIFY_AT = {f"p{i}": 11 for i in range(3)}
-        _VERIFY_NEXT = {}
-
-    with pytest.raises(ValueError, match="over-committed"):
-        wm.check_capacity(mkrows(50, 48), set(), PinnedEntry, 10)
-
-    # the same pins are FREE when they name queries already in the due
-    # cohort (the r11 pins in the live table)
-    rows = mkrows(50, 45)
-    for i in range(3):
-        rows.append(
-            {"name": f"p{i}", "in_window": False, "last_pass_round": 8,
-             "verdict_age_rounds": 2, "deferred_once": False}
-        )
-    cap = wm.check_capacity(rows, set(), PinnedEntry, 10)
-    assert cap["next_round_pinned_extra"] == 0
-
-
-def test_build_manifest_live_tree_capacity_ok():
-    """The committed pin tables must satisfy the capacity invariants on
-    the real tree (a bad pin fails this test before it ships)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "window_manifest", "/root/repo/tools/window_manifest.py"
-    )
-    wm = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(wm)
-    m = wm.build_manifest()
-    assert m["capacity"]["next_round_demand"] <= m["window_size"]
-
-
-def test_defer_until_is_horizon_keyed(monkeypatch):
-    """A _DEFER_UNTIL entry holds its query out of EVERY round before
-    its horizon and expires exactly at it — the multi-round analog of
-    _DEFER_ONCE for when the next round is already at capacity too."""
-    names = list(entrymod.queries())
-    for dname, drnd in entrymod._DEFER_UNTIL.items():
-        assert dname in names, f"_DEFER_UNTIL names unknown query {dname}"
-        assert isinstance(drnd, int) and drnd > 0
-    for probe in (11, 12, 13, 14):
-        monkeypatch.setattr(entrymod, "_next_round", lambda r=probe: r)
-        active = entrymod._active_deferrals()
-        for name, horizon in entrymod._DEFER_UNTIL.items():
-            assert (name in active) == (probe < horizon), (probe, name, horizon)
-
-
-def test_check_horizon_catches_far_collision():
-    """check_horizon simulates the rotation several rounds out, so a
-    _DEFER_UNTIL horizon landing on an over-committed round fails when
-    the entry is WRITTEN, not two rounds later at grading time."""
-    import importlib.util
-
-    import pytest
-
-    spec = importlib.util.spec_from_file_location(
-        "window_manifest", "/root/repo/tools/window_manifest.py"
-    )
-    wm = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(wm)
-
-    def mkrows(cohorts, extra_new=()):
-        # cohorts: {last_pass_round: n_queries}; next_round-3 cohort in window
-        rows, i = [], 0
-        for lp, n in cohorts.items():
-            for _ in range(n):
-                rows.append({
-                    "name": f"q{i}", "in_window": lp == 7,
-                    "last_pass_round": lp, "verdict_age_rounds": 10 - lp,
-                    "deferred_once": False,
-                })
-                i += 1
-        for name, horizon in extra_new:
-            rows.append({
-                "name": name, "in_window": False, "last_pass_round": None,
-                "verdict_age_rounds": None, "deferred_once": True,
-            })
-        return rows
-
-    class Saturated:
-        _VERIFY_AT = {}
-        _VERIFY_NEXT = {}
-        _DEFER_ONCE = {}
-        _DEFER_UNTIL = {"newq": 12}
-
-    # 50/50/50 saturated corpus + a new query deferred to round 12,
-    # where the r9 cohort already fills the window -> round 12 overflows
-    rows = mkrows({7: 50, 8: 50, 9: 50}, extra_new=[("newq", 12)])
-    with pytest.raises(ValueError, match="over-committed"):
-        wm.check_horizon(rows, Saturated, 10)
-
-    # the same query keyed to a round with a spare slot passes: the
-    # cohort graded NOW recycles at the horizon round, so the spare
-    # slot must live in the current window's cohort (49 + newq = 50)
-    class Fits:
-        _VERIFY_AT = {}
-        _VERIFY_NEXT = {}
-        _DEFER_ONCE = {}
-        _DEFER_UNTIL = {"newq": 13}
-
-    rows = mkrows({7: 49, 8: 50, 9: 50}, extra_new=[("newq", 13)])
-    out = wm.check_horizon(rows, Fits, 10)
-    assert out["13"] == 50  # the horizon round absorbs the new query

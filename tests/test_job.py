@@ -1,7 +1,13 @@
 import pytest
 from pyspark.sql import functions as F
 
-from yaetos_spark.job import SparkJob, SqlJob, parse_sql_file_params, strip_param_lines
+from yaetos_spark.job import (
+    DataQualityError,
+    SparkJob,
+    SqlJob,
+    parse_sql_file_params,
+    strip_param_lines,
+)
 from yaetos_spark.plans.flow import Flow
 from yaetos_spark.plans.registry import Registry
 
@@ -75,7 +81,7 @@ def test_pk_gate_fails(spark, tmp_path):
             "pks": ["id"],
         }
     )
-    with pytest.raises(AssertionError):
+    with pytest.raises(DataQualityError, match="primary key"):
         job.etl(spark)
 
 

@@ -27,16 +27,13 @@ from plan_audit import SINGLE_ROW_BROADCASTS, audit_plan  # noqa: E402
 
 
 @pytest.fixture(scope="module")
-def census(spark, sf_dir):
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
+def census(corpus):
     out = {}
-    for name, fn in qs.items():
-        try:
-            out[name] = audit_plan(fn(spark, sf_dir))
-        except Exception as e:  # plan BUILD failure is itself a violation
-            out[name] = {"err": f"{type(e).__name__}: {str(e)[:200]}"}
+    for name, built in corpus.items():
+        if isinstance(built, Exception):  # plan BUILD failure is itself a violation
+            out[name] = {"err": f"{type(built).__name__}: {str(built)[:200]}"}
+        else:
+            out[name] = audit_plan(built[0])
     return out
 
 

@@ -89,7 +89,7 @@ def test_run_expectations_nulls_fail_set_and_pattern(spark):
 def test_expectations_job_gate(spark, tmp_path):
     import pytest as _pytest
 
-    from yaetos_spark.job import SparkJob
+    from yaetos_spark.job import DataQualityError, SparkJob
 
     class J(SparkJob):
         def transform(self, src):
@@ -104,7 +104,7 @@ def test_expectations_job_gate(spark, tmp_path):
             "add_created_at": False,
         }
     )
-    with _pytest.raises(AssertionError, match="expectations failed"):
+    with _pytest.raises(DataQualityError, match="expectations failed"):
         job.etl(spark)
 
 

@@ -30,6 +30,12 @@ from yaetos_spark.sources.readers import load_input
 from yaetos_spark.sources.writers import save_output
 
 
+class DataQualityError(Exception):
+    """A job output failed its primary-key or expectation gate.  A
+    typed raise rather than ``assert``, so the gate survives
+    ``python -O``."""
+
+
 class SparkJob:
     """Base class for all jobs. Subclass and override ``transform``."""
 
@@ -177,8 +183,8 @@ class SparkJob:
         if not self.params.get("no_fw_cache"):
             output = output.persist()
         pks = self.output_pks()
-        if pks:
-            assert check_pk(output, pks), f"primary key {pks} not unique in {self.job_name} output"
+        if pks and not check_pk(output, pks):
+            raise DataQualityError(f"primary key {pks} not unique in {self.job_name} output")
         rules = self.params.get("expectations")
         if rules:
             from yaetos_spark.operators.quality import run_expectations
@@ -186,7 +192,7 @@ class SparkJob:
             ok, report = run_expectations(output, rules)
             if not ok:
                 failed = [r.asDict() for r in report.filter(~report.passed).collect()]
-                raise AssertionError(f"expectations failed in {self.job_name}: {failed}")
+                raise DataQualityError(f"expectations failed in {self.job_name}: {failed}")
         out_spec = dict(self.output_spec())
         if out_spec.get("path"):
             out_spec["path"] = expand_path(out_spec["path"], self.params, self._now, self.spark)
