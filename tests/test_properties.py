@@ -1146,6 +1146,39 @@ def test_cdc_compact_then_upsert_equals_full_replay(spark, case):
 
 
 @st.composite
+def _cdc_batches_case(draw):
+    """A `_cdc_case` changelog cut into 1-3 non-empty batches, with its
+    seq coarsened by 1-3 so rows inside a batch can tie on seq."""
+    ops, _split = draw(_cdc_case())
+    coarse = draw(st.integers(1, 3))
+    ops = [(k, seq // coarse, p) for k, seq, p in ops]
+    cuts = sorted(set(draw(st.lists(st.integers(1, len(ops)), max_size=2))) | {0, len(ops)})
+    return [ops[a:b] for a, b in zip(cuts, cuts[1:]) if a < b]
+
+
+@given(_cdc_batches_case())
+@settings(**SETTINGS)
+def test_merge_batch_into_snapshot_equals_upsert_fold(spark, tmp_path_factory, batches):
+    """The bucketed one-aggregate merge keeps the MERGE semantics of the
+    operator pair it replaces: folding the batches through
+    merge_batch_into_snapshot equals folding them through
+    upsert(snapshot, latest_snapshot(batch)), ties on seq included."""
+    from yaetos_spark.operators.merge import latest_snapshot, upsert
+    from yaetos_spark.streaming.upsert import merge_batch_into_snapshot, read_snapshot
+
+    schema = "k long, seq long, payload string"
+    snap_dir = str(tmp_path_factory.mktemp("cdc") / "snap")
+    want = None
+    for rows in batches:
+        batch = spark.createDataFrame(rows, schema)
+        merge_batch_into_snapshot(batch, snap_dir, ["k"], "seq", n_buckets=4)
+        delta = latest_snapshot(batch, ["k"], "seq")
+        want = delta if want is None else upsert(want, delta, ["k"])
+    got = sorted(tuple(r) for r in read_snapshot(spark, snap_dir).select("k", "seq", "payload").collect())
+    assert got == sorted(tuple(r) for r in want.collect())
+
+
+@st.composite
 def _big_sum_ols_case(draw):
     """Points whose sufficient statistics straddle the double-mantissa
     boundary: |Sy| spans ~2^50..2^56 and Sxy/Sxx far exceed 2^53, so

@@ -704,3 +704,54 @@ def test_starved_scan_repartition_gate(spark, sf_dir):
         par.selectExpr("sum(hash(l_orderkey, l_partkey, l_quantity))").first()[0]
         == base.selectExpr("sum(hash(l_orderkey, l_partkey, l_quantity))").first()[0]
     )
+
+
+def test_scan_layout_unknown_only_for_missing_or_unreadable_parquet(tmp_path):
+    """The starved-scan gate's layout probe treats a missing path or a
+    corrupt footer as "unknown layout"; any other error is a bug and
+    propagates."""
+    from yaetos_spark.sources.tables import _scan_layout
+
+    bad = tmp_path / "corrupt.parquet"
+    bad.write_bytes(b"not a parquet file")
+    assert _scan_layout(str(bad)) is None
+    assert _scan_layout(str(tmp_path / "missing.parquet")) is None
+    with pytest.raises(TypeError):
+        _scan_layout(None)
+
+
+def test_parse_bytes_reads_spark_size_suffixes():
+    from yaetos_spark.sources.tables import _parse_bytes
+
+    assert _parse_bytes("256m") == 268435456
+    assert _parse_bytes("256mb") == 268435456
+    assert _parse_bytes("134217728") == 134217728
+    assert _parse_bytes("1g") == 1 << 30
+    assert _parse_bytes("64k") == 65536
+    assert _parse_bytes("2t") == 2 << 40
+    with pytest.raises(ValueError):
+        _parse_bytes("lots")
+
+
+def test_starved_scan_gate_honours_suffixed_max_partition_bytes(spark, tmp_path):
+    """A suffixed maxPartitionBytes is parsed, not replaced by 128 MiB:
+    with 1k splits a file of many row groups already feeds every core,
+    so the gate stays off (at 128 MiB it would be one split and fire)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from yaetos_spark.sources.tables import _starved_scan_partitions
+
+    p = spark.sparkContext.defaultParallelism
+    n = 64 * p
+    path = str(tmp_path / "t.parquet")
+    table = pa.table({"k": list(range(n)), "pad": [os.urandom(64).hex() for _ in range(n)]})
+    pq.write_table(table, path, row_group_size=8)
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
+        assert _starved_scan_partitions(spark, path) == p
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+        assert _starved_scan_partitions(spark, path) is None
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)

@@ -156,6 +156,85 @@ def test_streaming_upsert_rejects_bucket_count_change(spark, tmp_path):
         merge_batch_into_snapshot(df, snap, ["id"], "seq", n_buckets=16)
 
 
+def _snapshot_md5s(snap: str) -> dict[str, str]:
+    import hashlib
+    import os
+
+    out = {}
+    for root, _dirs, names in os.walk(snap):
+        for n in names:
+            p = os.path.join(root, n)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, snap)] = hashlib.md5(f.read()).hexdigest()
+    return out
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([(1, "b", 1, "x")], "id long, v string, seq long, extra string"),
+        ([(1, 1)], "id long, seq long"),
+    ],
+    ids=["extra_column", "missing_column"],
+)
+def test_streaming_upsert_schema_drift_raises_before_any_write(spark, tmp_path, rows, schema):
+    """A batch whose columns differ from the snapshot's fails the merge
+    and leaves every snapshot file byte-identical."""
+    from pyspark.errors import AnalysisException
+
+    from yaetos_spark.streaming.upsert import merge_batch_into_snapshot
+
+    snap = str(tmp_path / "snap")
+    base = spark.createDataFrame([(1, "a", 0), (2, "b", 0)], "id long, v string, seq long")
+    merge_batch_into_snapshot(base, snap, ["id"], "seq", n_buckets=4)
+    before = _snapshot_md5s(snap)
+    with pytest.raises(AnalysisException):
+        merge_batch_into_snapshot(spark.createDataFrame(rows, schema), snap, ["id"], "seq", n_buckets=4)
+    assert _snapshot_md5s(snap) == before
+
+
+def test_streaming_upsert_does_not_grow_bucket_file_count(spark, tmp_path):
+    """Merging the same key batch after batch replaces its bucket's
+    files instead of adding to them."""
+    import os
+
+    from yaetos_spark.streaming.upsert import _bucket, merge_batch_into_snapshot, read_snapshot
+
+    snap = str(tmp_path / "snap")
+    schema = "id long, v string, seq long"
+    base = spark.createDataFrame([(k, "a", 0) for k in range(20)], schema)
+    merge_batch_into_snapshot(base, snap, ["id"], "seq", n_buckets=4)
+    b = spark.createDataFrame([(7,)], "id long").select(_bucket(["id"], 4).alias("b")).first().b
+    bucket_dir = os.path.join(snap, f"_bucket={b}")
+
+    def n_files():
+        return sum(f.endswith(".parquet") for f in os.listdir(bucket_dir))
+
+    counts = [n_files()]
+    for seq in (1, 2, 3):
+        merge_batch_into_snapshot(spark.createDataFrame([(7, f"v{seq}", seq)], schema),
+                                  snap, ["id"], "seq", n_buckets=4)
+        counts.append(n_files())
+    assert counts == sorted(counts, reverse=True), counts
+    state = {r.id: (r.v, r.seq) for r in read_snapshot(spark, snap).collect()}
+    assert len(state) == 20 and state[7] == ("v3", 3)
+
+
+def test_streaming_upsert_null_key_batch_row_replaces_stale_row(spark, tmp_path):
+    """NULL keys group together, as in latest_snapshot: the batch's
+    NULL-key row replaces the snapshot's, one row not two."""
+    from yaetos_spark.streaming.upsert import merge_batch_into_snapshot, read_snapshot
+
+    snap = str(tmp_path / "snap")
+    schema = "id long, v string, seq long"
+    merge_batch_into_snapshot(spark.createDataFrame([(None, "old", 0), (1, "a", 0)], schema),
+                              snap, ["id"], "seq", n_buckets=4)
+    merge_batch_into_snapshot(spark.createDataFrame([(None, "new", 1)], schema),
+                              snap, ["id"], "seq", n_buckets=4)
+    rows = sorted((r.id is None, r.v) for r in read_snapshot(spark, snap).collect())
+    assert rows == [(False, "a"), (True, "new")]
+
+
 def test_interval_join_streams(spark, tmp_path):
     """Impression x conversion attribution join: matches only within
     the gap window, state evictable via the two-sided time bound."""

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,7 +43,7 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
     the scan otherwise fails with PARQUET_TYPE_ILLEGAL."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
+    except PySparkException:
         pass  # conf locked down (e.g. Spark Connect policy) — scan may still work
 
 
@@ -71,14 +72,16 @@ _LAYOUT_CACHE: dict[tuple[str, float], tuple[int, int, int]] = {}
 
 
 def _scan_layout(path: str) -> tuple[int, int, int] | None:
-    """(bytes, rows, row_groups) of a parquet file or directory."""
+    """(bytes, rows, row_groups) of a parquet file or directory, or
+    None when the path is missing or a footer is unreadable."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     try:
         st = os.stat(path)
         key = (path, st.st_mtime)
         if key in _LAYOUT_CACHE:
             return _LAYOUT_CACHE[key]
-        import pyarrow.parquet as pq
-
         files = []
         if os.path.isdir(path):
             for root, _dirs, names in os.walk(path):
@@ -94,8 +97,20 @@ def _scan_layout(path: str) -> tuple[int, int, int] | None:
         out = (total_bytes, rows, groups)
         _LAYOUT_CACHE[key] = out
         return out
-    except Exception:
+    except (OSError, pa.ArrowException):
         return None  # unknown layout -> no repartition (safe default)
+
+
+_BYTE_UNITS = {"k": 1, "m": 2, "g": 3, "t": 4, "p": 5}
+
+
+def _parse_bytes(value: str) -> int:
+    """A Spark byte-size string ("134217728", "256m", "1g", "64kb") in
+    bytes; a bare number is bytes, as in Spark's own byte configs."""
+    v = value.strip().lower().removesuffix("b")
+    if v and v[-1] in _BYTE_UNITS:
+        return int(v[:-1]) * 1024 ** _BYTE_UNITS[v[-1]]
+    return int(v)
 
 
 def _starved_scan_partitions(spark: SparkSession, path: str) -> int | None:
@@ -120,10 +135,7 @@ def _starved_scan_partitions(spark: SparkSession, path: str) -> int | None:
     if layout is None:
         return None
     total_bytes, rows, groups = layout
-    try:
-        max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").rstrip("b"))
-    except Exception:
-        max_split = 128 * 1024 * 1024
+    max_split = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     byte_tasks = max(1, -(-total_bytes // max_split))
     eff_tasks = min(byte_tasks, max(1, groups))
     p = spark.sparkContext.defaultParallelism

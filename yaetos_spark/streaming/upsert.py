@@ -2,13 +2,22 @@
 snapshot, rewriting ONLY the buckets a batch touches.
 
 The 100 TB design point: a snapshot table partitioned by a key-hash
-bucket column. Each micro-batch compacts its rows to one-per-key,
-reads back just the buckets those keys land in, merges, and overwrites
-those buckets alone via dynamic partition overwrite — cost per batch
-is O(touched buckets), not O(snapshot). Replaying a failed batch
-rewrites the same buckets with the same content (foreachBatch's
-idempotence recipe). A full-rewrite variant would not survive at
-scale, which is why it isn't offered.
+bucket column. Each micro-batch reads back just the buckets its keys
+land in and merges them with the batch in ONE ranked aggregate, then
+overwrites those buckets alone via dynamic partition overwrite. Cost
+per batch is O(touched buckets), not O(snapshot): one shuffle, and one
+file per touched bucket per shuffle partition (the merged rows replace
+the bucket's files, so files do not pile up batch after batch).
+Replaying a failed batch rewrites the same buckets with the same
+content (foreachBatch's idempotence recipe). A full-rewrite variant
+would not survive at scale, which is why it isn't offered.
+
+Merge rule: batch rows win on key collision. Within a batch the row
+with the greatest ``order_col`` wins, ties broken by xxhash64 of the
+row, exactly as ``operators.merge.latest_snapshot`` picks. Across
+batches arrival order wins: ``order_col`` is never compared with the
+snapshot, so a late row that arrives in a later batch replaces the
+newer row the snapshot already holds.
 """
 
 from __future__ import annotations
@@ -17,9 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-from yaetos_spark.operators.merge import latest_snapshot, upsert
-
 BUCKET_COL = "_bucket"
+# the merge's rank columns: source (existing 0 < batch 1) and tie-break
+_SRC = "_merge_src"
+_TB = "_merge_tb"
 
 
 def _bucket(keys: list[str], n_buckets: int):
@@ -31,20 +41,22 @@ def _check_bucket_layout(spark, snapshot_dir: str, n_buckets: int) -> None:
     with a different n_buckets would read the wrong buckets and leave
     stale duplicate keys behind. A `_meta` sidecar (underscore prefix:
     invisible to parquet directory readers) records the layout on first
-    write; later calls must match."""
-    from pyspark.sql.utils import AnalysisException
-
+    write; later calls must match. This module owns the sidecar's
+    schema, so reading it declares the schema instead of inferring it
+    from the footer (one Spark job fewer per batch)."""
     meta_path = f"{snapshot_dir}/_meta"
     try:
-        recorded = spark.read.parquet(meta_path).first()["n_buckets"]
-    except AnalysisException:
+        row = spark.read.schema("n_buckets int").parquet(meta_path).first()
+    except AnalysisException:  # first write: no sidecar yet
+        row = None
+    if row is None:
         spark.createDataFrame([(n_buckets,)], "n_buckets int").coalesce(1).write.mode(
             "overwrite"
         ).parquet(meta_path)
         return
-    if recorded != n_buckets:
+    if row["n_buckets"] != n_buckets:
         raise ValueError(
-            f"snapshot at {snapshot_dir} was bucketed with n_buckets={recorded}; "
+            f"snapshot at {snapshot_dir} was bucketed with n_buckets={row['n_buckets']}; "
             f"got n_buckets={n_buckets} — merging would strand stale keys"
         )
 
@@ -57,18 +69,28 @@ def merge_batch_into_snapshot(
     n_buckets: int = 64,
 ) -> None:
     """One micro-batch of the streaming upsert (usable standalone for
-    batch CDC too). Compact → read touched buckets → merge →
-    dynamically overwrite those buckets."""
+    batch CDC too): tag the batch with its buckets, read the touched
+    buckets, keep one row per (bucket, key) and dynamically overwrite
+    those buckets.
+
+    The one aggregate is ``max_by(row, (source, order_col, tie))``:
+    existing rows rank ``(0, order_col, 0)``, batch rows
+    ``(1, order_col, xxhash64(batch row))``. So a batch row beats any
+    existing row of its key (batch rows win on key collision) and the
+    batch's own rows compete exactly as in ``latest_snapshot``. NULL
+    keys group together as in ``latest_snapshot``: a NULL-key batch row
+    replaces the stale NULL-key row. A batch whose columns differ from
+    the snapshot's raises in ``unionByName``, before anything is
+    written."""
     spark = batch_df.sparkSession
     _check_bucket_layout(spark, snapshot_dir, n_buckets)
-    compacted = latest_snapshot(batch_df, keys, order_col).withColumn(
-        BUCKET_COL, _bucket(keys, n_buckets)
-    )
+    batch = batch_df.withColumn(BUCKET_COL, _bucket(keys, n_buckets))
     # metadata-scale collect: at most n_buckets distinct values (bucket
     # ids, not data rows), so this stays O(64) even at 100 TB
-    touched = [r[BUCKET_COL] for r in compacted.select(BUCKET_COL).distinct().collect()]
+    touched = [r[BUCKET_COL] for r in batch.select(BUCKET_COL).distinct().collect()]
     if not touched:
         return
+    rows = batch.withColumns({_SRC: F.lit(1), _TB: F.xxhash64(*batch_df.columns)})
     # the try guards ONLY the read: a failure inside the merge itself
     # (schema drift, bad keys) must surface, not be misread as "first
     # batch" — that would overwrite touched buckets with batch-only
@@ -78,11 +100,17 @@ def merge_batch_into_snapshot(
     except AnalysisException:  # first batch: snapshot doesn't exist yet
         existing = None
     if existing is not None:
-        merged = upsert(
-            existing.where(F.col(BUCKET_COL).isin(touched)), compacted, keys
+        rows = (
+            existing.where(F.col(BUCKET_COL).isin(touched))
+            .withColumns({_SRC: F.lit(0), _TB: F.lit(0).cast("long")})
+            .unionByName(rows)
         )
-    else:
-        merged = compacted
+    data_cols = [c for c in rows.columns if c not in (BUCKET_COL, _SRC, _TB)]
+    merged = (
+        rows.groupBy(BUCKET_COL, *keys)
+        .agg(F.max_by(F.struct(*data_cols), F.struct(_SRC, order_col, _TB)).alias("_row"))
+        .select("_row.*", BUCKET_COL)
+    )
     # materialize before writing: the merge reads the very files the
     # dynamic overwrite below replaces, so the lineage must be cut
     merged = merged.localCheckpoint(eager=True)
